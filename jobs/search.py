@@ -204,7 +204,9 @@ def _topk_frame(spark, pidx, cfg, queries, ranker, n, exhaustive,
                 or search_after is not None or collapse is not None
                 or demote is not None or min_match is not None
                 or dismax is not None or sort_spec is not None
-                or decay_spec is not None or fvf_spec is not None):
+                or decay_spec is not None or fvf_spec is not None
+                or pins or constant_score is not None
+                or random_seed is not None or inner_hits is not None):
             raise SystemExit("--rescore combines only with plain bm25 "
                              "retrieval")
         from searchengine_spark.query.rescore import rescore_topk
@@ -2524,7 +2526,10 @@ def _serve_federated(spark, args) -> None:
                     or doc_boosts is not None or args.offset
                     or cursor is not None or args.collapse or args.demote
                     or args.min_should_match is not None
-                    or args.dismax is not None):
+                    or args.dismax is not None or args.pin
+                    or args.constant_score is not None
+                    or args.random_score is not None
+                    or args.collapse_inner_hits is not None):
                 raise SystemExit("--rescore combines only with plain bm25 "
                                  "retrieval")
             from searchengine_spark.query.rescore import (

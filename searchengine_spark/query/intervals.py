@@ -394,15 +394,9 @@ def local_intervals(searcher, query: str, ordered: bool = False,
     terms = list(dict.fromkeys(tokenize_text(query, searcher.cfg)))
     if not terms:
         return []
-    searcher._ensure_terms(terms)
-    parts = []
-    for t in terms:
-        sl = searcher._slices.get(t)
-        if sl is None or not len(sl):
-            return []  # AND semantics
-        parts.append(sl)
-    pdf = pd.concat(parts, ignore_index=True)
-    pdf["query_id"] = 0
+    pdf = searcher._matched(terms)
+    if pdf is None or pdf["term"].nunique() < len(terms):
+        return []  # AND semantics
     scorer = _intervals_scorer(
         {0: terms}, ordered, max_gaps, k,
         decode=searcher._dec, decode_pos=searcher._dec_pos,

@@ -416,8 +416,8 @@ def local_phrase(searcher, phrase: str, k: int | None = 10,
     searcher._ensure_terms(list(dict.fromkeys(toks)))
     rows_by_slot: Dict[int, list] = {}
     for slot, term in enumerate(toks):
-        sl = searcher._slices.get(term)
-        if sl is None or not len(sl):
+        sl = searcher._matched([term])
+        if sl is None:
             return []
         rows_by_slot[slot] = list(sl.itertuples(index=False))
     got = _phrase_group(
@@ -541,14 +541,10 @@ def local_phrase_prefix(
     searcher._ensure_terms(flat)
     rows_by_slot: Dict[int, list] = {}
     for slot, terms in enumerate(slots):
-        merged: list = []
-        for term in terms:
-            sl = searcher._slices.get(term)
-            if sl is not None and len(sl):
-                merged.extend(sl.itertuples(index=False))
-        if not merged:
+        sl = searcher._matched(list(terms))
+        if sl is None:
             return []
-        rows_by_slot[slot] = merged
+        rows_by_slot[slot] = list(sl.itertuples(index=False))
     got = _phrase_group(slots, rows_by_slot, searcher._dec,
                         searcher._dec_pos, slop=int(slop))
     if got is None:

@@ -5,10 +5,15 @@ in-process loop over a locally loaded index — ~446 ms/query single-node
 (reference README.md:279). Paying a distributed Spark job per interactive
 query is the wrong execution tier: job scheduling + task launch dominate
 (p50 ~0.5-1.3 s regardless of data size). LocalSearcher serves the hot
-path with ZERO Spark jobs: the packed index's matched slices live in
-driver memory and queries run the SAME pandas/numpy scorer code the
-distributed batch paths use (``_wand_scorer``, ``packed_prox_scorer``,
-``_scorer``) — results are gated identical in tests/test_serve.py.
+path with ZERO Spark jobs: each term's packed rows live in process memory
+as flat arrays (chunk, max_tfsat, the stored postings/positions buffers),
+and BM25 queries hand them straight to the array kernel the distributed
+batch paths also run (``wand.wand_topk``; no pandas object on that path).
+The frame-shaped rankers (tfidf, proximity, boolean, explain, the
+positional helpers) get a frame built from the same arrays and run the
+distributed paths' scorers (``packed_prox_scorer``, ``_scorer``) —
+results are gated identical in tests/test_serve.py and bit for bit
+against the golden file in tests/test_wand_golden.py.
 
 Two modes:
 
@@ -33,7 +38,7 @@ from __future__ import annotations
 
 from collections import OrderedDict
 from decimal import ROUND_HALF_EVEN, ROUND_HALF_UP, Decimal
-from typing import Dict, List, Sequence
+from typing import Dict, List, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -44,7 +49,7 @@ from ..indexing.codec import decode_docs, decode_positions, decode_postings
 from ..indexing.packed import PackedIndex
 from ..tokenizer import TokenizerConfig, tokenize_text
 from .proximity import _query_ltc, _scorer, packed_prox_scorer, validate_schema
-from .wand import _member_mask, _wand_scorer
+from .wand import _member_mask, wand_topk
 
 #: preload="auto" budget in ENCODED bytes (the preload snapshots raw
 #: varbyte buffers; decode stays lazy/LRU). 1 GiB ≈ the old 200M-posting
@@ -84,6 +89,35 @@ RANKERS = (
 )
 
 
+class _Slice(NamedTuple):
+    """One term's packed rows, in stored order. ``postings``/``positions``
+    are object arrays holding the stored buffers themselves: the decoded
+    LRU is keyed by ``id(buf)``, so these objects must stay referenced."""
+
+    chunk: np.ndarray  # int64
+    max_tfsat: np.ndarray  # float64
+    postings: np.ndarray  # object
+    positions: np.ndarray | None  # object; positional indexes only
+
+
+def _slices_of(pdf: pd.DataFrame, positional: bool) -> Dict[str, _Slice]:
+    """Split a (term, chunk, max_tfsat, postings[, positions]) frame into
+    per-term array slices — views of one stably term-sorted copy, so each
+    term keeps its rows in stored order."""
+    codes, names = pd.factorize(pdf["term"])
+    order = np.argsort(codes, kind="stable")
+    cuts = np.searchsorted(codes[order], np.arange(len(names) + 1))
+    chunk = pdf["chunk"].to_numpy(np.int64)[order]
+    mt = pdf["max_tfsat"].to_numpy(np.float64)[order]
+    post = pdf["postings"].to_numpy()[order]
+    pos = pdf["positions"].to_numpy()[order] if positional else None
+    return {
+        t: _Slice(chunk[a:b], mt[a:b], post[a:b],
+                  pos[a:b] if pos is not None else None)
+        for t, a, b in zip(names, cuts[:-1].tolist(), cuts[1:].tolist())
+    }
+
+
 def _round3(x: float) -> float:
     """Python twin of Spark's F.bround(double, 3): BigDecimal.valueOf(x)
     (shortest decimal repr — == Python repr) rounded HALF_EVEN — which is
@@ -116,9 +150,9 @@ class LocalSearcher:
         self._index_cols = ["term", "chunk", "max_tfsat", "postings"] + (
             ["positions"] if self._positional else []
         )
-        # caches (term -> pandas slice; scalars by id; norms per sidecar
+        # caches (term -> array slice; scalars by id; norms per sidecar
         # column — one cosine denominator per doc-side tf letter)
-        self._slices: Dict[str, pd.DataFrame] = {}
+        self._slices: Dict[str, _Slice] = {}
         self._idf: Dict[str, float] = {}
         self._df: Dict[str, int] = {}
         self._variants: Dict[str, list] | None = None  # fuzzy, lazy-built
@@ -156,7 +190,8 @@ class LocalSearcher:
 
     def _preload(self) -> None:
         pdf = self.pidx.index.select(*self._index_cols).toPandas()
-        self._slices = {t: g for t, g in pdf.groupby("term", sort=False)}
+        self._slices = _slices_of(pdf, self._positional)
+        del pdf
         for r in self.pidx.term_stats.select("term", "df", "idf").collect():
             self._idf[r["term"]] = float(r["idf"])
             self._df[r["term"]] = int(r["df"])
@@ -190,8 +225,10 @@ class LocalSearcher:
             .select(*self._index_cols)
             .toPandas()
         )
-        grouped = {t: g for t, g in pdf.groupby("term", sort=False)}
-        empty = pdf.iloc[0:0]
+        grouped = _slices_of(pdf, self._positional)
+        nothing = np.empty(0, dtype=object)
+        empty = _Slice(np.empty(0, dtype=np.int64), np.empty(0), nothing,
+                       nothing if self._positional else None)
         for t in missing:
             self._slices[t] = grouped.get(t, empty)  # negative-cache misses
         for r in (
@@ -304,15 +341,40 @@ class LocalSearcher:
 
     # ------------------------------------------------------------- serving
 
-    def _matched(self, terms: List[str]) -> pd.DataFrame | None:
+    def _gather(self, terms: List[str]) -> tuple | None:
+        """-> (names, term codes, chunk, max_tfsat, postings, positions):
+        the matched rows of ``terms`` (those with any) as flat arrays, term
+        by term in the given order — the kernel's input. None if no term
+        matches anything."""
         self._ensure_terms(terms)
-        parts = [self._slices[t] for t in terms if t in self._slices]
-        parts = [p for p in parts if len(p)]
+        names, parts = [], []
+        for t in terms:
+            sl = self._slices.get(t)
+            if sl is not None and len(sl.chunk):
+                names.append(t)
+                parts.append(sl)
         if not parts:
             return None
-        pdf = pd.concat(parts, ignore_index=True)
-        pdf["query_id"] = 0
-        return pdf
+        codes = np.repeat(np.arange(len(parts)),
+                          [len(p.chunk) for p in parts])
+        cols = [np.concatenate([p[i] for p in parts]) for i in range(3)]
+        pos = (np.concatenate([p.positions for p in parts])
+               if self._positional else None)
+        return (names, codes, *cols, pos)
+
+    def _matched(self, terms: List[str]) -> pd.DataFrame | None:
+        """The matched rows as the frame the frame-shaped scorers take
+        (term, chunk, max_tfsat, postings[, positions], query_id=0)."""
+        g = self._gather(terms)
+        if g is None:
+            return None
+        names, codes, chunk, mt, post, pos = g
+        cols = {"term": np.asarray(names, dtype=object)[codes],
+                "chunk": chunk, "max_tfsat": mt, "postings": post}
+        if pos is not None:
+            cols["positions"] = pos
+        cols["query_id"] = 0
+        return pd.DataFrame(cols)
 
     def search(
         self,
@@ -527,31 +589,26 @@ class LocalSearcher:
         if not terms:
             return []  # pure-negation queries included: never a corpus scan
         fetch = terms + [t for t in ex_terms if t not in terms]
-        pdf = self._matched(fetch)
-        if pdf is None:
-            return []
         idf = idf_override if idf_override is not None else self._idf
-
-        if ranker.startswith("boolean_"):
-            return self._boolean(pdf, len(terms), ranker == "boolean_and",
-                                 resolve, allowed=allowed,
-                                 exclude=set(ex_terms) or None)
         if ranker in ("bm25", "bm25_and"):
+            # the term slices' arrays go straight to the WAND kernel and
+            # its arrays straight to the result dicts: no pandas object
+            g = self._gather(fetch)
+            if g is None:
+                return []
             if self._payload != "freq":
                 raise ValueError("BM25 needs a payload='freq' build")
             require_all = None
             if ranker == "bm25_and":
                 # conjunctive contract: any OOV term -> empty AND set
-                # (_matched already ensured the term slices/idf are loaded)
+                # (_gather already ensured the term slices/idf are loaded)
                 if any(t not in self._idf for t in terms):
                     return []
-                require_all = {0: len(terms)}
+                require_all = len(terms)
             sa = None
             if search_after is not None:
-                sa = {0: (float(search_after[0]), int(search_after[1]))}
-            mm = ({0: int(min_should_match)}
-                  if min_should_match is not None else None)
-            dem_map = dem_keep = None
+                sa = (float(search_after[0]), int(search_after[1]))
+            dem = keep = None
             if dem_terms:
                 if set(dem_terms) & set(ex_terms):
                     raise ValueError(
@@ -559,28 +616,36 @@ class LocalSearcher:
                         "(exclusion removes, demotion sinks)"
                     )
                 # demote slices must be loaded like scoring slices
-                self._ensure_terms([t for t in dem_terms
-                                    if t not in self._idf])
-                dem_map = {0: set(t for t in dem_terms if t in self._idf)}
-                dem_keep = {0: dem_map[0] & set(terms)}
-                extra = [t for t in sorted(dem_map[0]) if t not in fetch]
+                self._ensure_terms([t for t in dem_terms if t not in self._idf])
+                dem = set(t for t in dem_terms if t in self._idf)
+                keep = dem & set(terms)
+                extra = [t for t in sorted(dem) if t not in fetch]
                 if extra:
-                    pdf2 = self._matched(fetch + extra)
-                    if pdf2 is not None:
-                        pdf = pdf2
-            scorer = _wand_scorer(
-                k + offset, self.params, round_dp, idf, decode=self._dec,
-                allowed=allowed, require_all=require_all, boosts=boosts,
-                min_match=mm,
-                exclude_terms={0: set(ex_terms)} if ex_terms else None,
-                search_after=sa,
-                demote_terms=dem_map, demote_keep=dem_keep,
+                    g = self._gather(fetch + extra) or g
+            names, codes, chunk, mt, post, _ = g
+            docs, scores = wand_topk(
+                k + offset, self.params, names, codes, chunk, mt, post, idf,
+                round_dp=round_dp, decode=self._dec, allowed=allowed,
+                require_all=require_all, boosts=boosts,
+                min_match=(int(min_should_match)
+                           if min_should_match is not None else None),
+                exclude=set(ex_terms) or None, search_after=sa,
+                demote=dem, demote_keep=keep,
                 demote_factor=float(negative_boost),
             )
-            out = scorer(pdf)
-            if offset:
-                out = out[out["rank"] > offset]
-        elif ranker == "bm25_optimized":
+            ranks = np.arange(1, len(docs) + 1)
+            # offset paging: page [offset, offset+k) keeps ABSOLUTE ranks
+            return self._rows(docs[offset:], scores[offset:], ranks[offset:],
+                              resolve)
+        pdf = self._matched(fetch)
+        if pdf is None:
+            return []
+
+        if ranker.startswith("boolean_"):
+            return self._boolean(pdf, len(terms), ranker == "boolean_and",
+                                 resolve, allowed=allowed,
+                                 exclude=set(ex_terms) or None)
+        if ranker == "bm25_optimized":
             if not self._positional:
                 raise ValueError("packed index was not built with positional=True")
             dmin, dmax = dl_bounds if dl_bounds is not None else (
@@ -780,17 +845,18 @@ class LocalSearcher:
         top = [t for t, _ in sorted(w.items(), key=lambda kv: (-kv[1], kv[0]))[:m]]
         if not top:
             return []
-        pdf = self._matched(top)
-        if pdf is None:
+        g = self._gather(top)
+        if g is None:
             return []
         if self._payload != "freq":
             raise ValueError("more_like needs a payload='freq' build")
-        out = _wand_scorer(
-            k + 1, self.params, round_dp, self._idf, decode=self._dec
-        )(pdf)
-        out = out[out["doc_id"] != did].head(k).reset_index(drop=True)
-        out["rank"] = out.index + 1
-        return self._resolve(out, resolve)
+        names, codes, chunk, mt, post, _ = g
+        docs, scores = wand_topk(k + 1, self.params, names, codes, chunk, mt,
+                                 post, self._idf, round_dp=round_dp,
+                                 decode=self._dec)
+        keep = docs != did
+        docs, scores = docs[keep][:k], scores[keep][:k]
+        return self._rows(docs, scores, np.arange(1, len(docs) + 1), resolve)
 
     def _tfidf(self, pdf, toks, k, boost, schema, round_dp, rerank_n,
                idf_map: Dict[str, float] | None = None):
@@ -923,19 +989,28 @@ class LocalSearcher:
         )
         return self._resolve(out, resolve)
 
-    def _resolve(self, out: pd.DataFrame, resolve: bool) -> List[dict]:
-        rows = out.to_dict("records")
+    def _rows(self, doc_ids, scores, ranks, resolve: bool) -> List[dict]:
+        """Result dicts (doc_id, score, rank, *ext cols) straight from the
+        arrays, as native Python scalars (json-identical to the
+        distributed tier's Row.collect())."""
+        rows = [
+            {"doc_id": d, "score": s, "rank": r}
+            for d, s, r in zip(np.asarray(doc_ids).tolist(),
+                               np.asarray(scores).tolist(),
+                               np.asarray(ranks).tolist())
+        ]
         if resolve and self._ext_cols:
-            self._ensure_docs([int(r["doc_id"]) for r in rows])
+            self._ensure_docs([r["doc_id"] for r in rows])
             for r in rows:
-                ext = self._docmap.get(int(r["doc_id"]))
+                ext = self._docmap.get(r["doc_id"])
                 if ext is not None:
-                    r.update(dict(zip(self._ext_cols, ext)))
-        for r in rows:
-            r["doc_id"] = int(r["doc_id"])
-            r["rank"] = int(r["rank"])
-            r.pop("query_id", None)
+                    r.update(zip(self._ext_cols, ext))
         return rows
+
+    def _resolve(self, out: pd.DataFrame, resolve: bool) -> List[dict]:
+        """:meth:`_rows` over a frame-shaped scorer's output."""
+        return self._rows(out["doc_id"].to_numpy(), out["score"].to_numpy(),
+                          out["rank"].to_numpy(), resolve)
 
 
 def _round3_up(x: float) -> float:

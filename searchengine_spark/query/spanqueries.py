@@ -523,17 +523,13 @@ def span_containing_topk_packed_batch(
 def _local_span(searcher, spec: tuple, kind: str, k: int | None):
     n_terms = {"first": 1, "not": 2, "within": 3, "containing": 3}[kind]
     terms = list(spec[:n_terms])
-    searcher._ensure_terms(terms)
-    parts = []
-    for t in terms:
-        sl = searcher._slices.get(t)
-        parts.append(sl if sl is not None and len(sl) else None)
-    if parts[0] is None:
+    pdf = searcher._matched(terms)
+    present = set(pdf["term"]) if pdf is not None else set()
+    if terms[0] not in present:
         return []  # no include/big occurrences at all
-    if kind in ("within", "containing") and any(p is None for p in parts):
+    if kind in ("within", "containing") and any(t not in present
+                                                for t in terms):
         return []  # inner semantics: all three terms must occur
-    pdf = pd.concat([p for p in parts if p is not None], ignore_index=True)
-    pdf["query_id"] = 0
     scorer = _packed_span_scorer(
         kind, {0: spec}, k, searcher._dec, searcher._dec_pos
     )

@@ -373,15 +373,9 @@ def local_minspan(searcher, query: str, k: int | None = 10,
     terms = list(dict.fromkeys(tokenize_text(query, searcher.cfg)))
     if not terms:
         return []
-    searcher._ensure_terms(terms)
-    parts = []
-    for t in terms:
-        sl = searcher._slices.get(t)
-        if sl is None or not len(sl):
-            return []  # AND semantics
-        parts.append(sl)
-    pdf = pd.concat(parts, ignore_index=True)
-    pdf["query_id"] = 0
+    pdf = searcher._matched(terms)
+    if pdf is None or pdf["term"].nunique() < len(terms):
+        return []  # AND semantics
     scorer = _span_scorer(
         {0: terms}, k,
         decode=searcher._dec,

@@ -62,17 +62,309 @@ def _member_mask(doc_ids: np.ndarray, allowed: np.ndarray) -> np.ndarray:
     return allowed[idx] == doc_ids
 
 
+def _term_mask(names: Sequence[str], terms) -> np.ndarray:
+    """Bool per distinct term name: is it in ``terms``? Gather it with the
+    per-row term codes to get a row mask."""
+    return np.fromiter((n in terms for n in names), dtype=bool,
+                       count=len(names))
+
+
+def _decode_default(buf):
+    return decode_postings(bytes(buf))
+
+
+def wand_topk(
+    k_top: int,
+    params: Bm25Params,
+    names: Sequence[str],
+    term: np.ndarray,
+    chunk: np.ndarray,
+    max_tfsat: np.ndarray,
+    postings: np.ndarray,
+    idf_map: dict,
+    *,
+    weights: dict | None = None,
+    round_dp: int | None = None,
+    decode=None,
+    decoders: dict | None = None,
+    doc_base: np.ndarray | None = None,
+    allowed: np.ndarray | None = None,
+    chunk_allowed: np.ndarray | None = None,
+    boosts: tuple | None = None,
+    bids: np.ndarray | None = None,
+    bvals: np.ndarray | None = None,
+    require_all: int | None = None,
+    min_match: int | None = None,
+    exclude=None,
+    search_after: tuple | None = None,
+    demote=None,
+    demote_keep=None,
+    demote_factor: float = 0.5,
+) -> tuple:
+    """Block-max WAND top-k of ONE query over its matched (term, chunk)
+    rows, given as flat arrays -> (doc_ids int64, scores float64) in
+    (score desc, doc_id asc) order, at most ``k_top`` long. The one BM25
+    top-k scorer: the in-process serving tier (query/serve.py) calls it
+    directly; the Spark batch paths reach it through :func:`_wand_scorer`.
+
+    Rows: ``term`` holds int codes into ``names`` (the distinct term
+    strings), aligned with ``chunk``, ``max_tfsat`` and ``postings`` (the
+    stored varbyte buffers). Rows are grouped by chunk with a stable
+    argsort, so a chunk's rows keep their input order and each doc's
+    contributions sum in that order. Per-chunk optional row arrays
+    (constant within a chunk, read off its first row): ``doc_base``,
+    ``chunk_allowed``, ``bids``/``bvals``.
+
+    ``round_dp``: round per-doc scores to this many decimals and rank by
+    the ROUNDED value (doc_id asc tie-break) — the cross-engine-stable
+    ordering the DuckDB oracle uses. Pruning stays safe under rounding via
+    an epsilon slack on the threshold (a chunk is skipped only when no doc
+    in it could even TIE the rounded heap minimum).
+
+    ``idf_map``: {term: stored 3dp idf}; ``weights``: optional {term: w}
+    multiplicative weight (weighted-query / PRF-expanded retrieval, absent
+    terms weigh 1.0) folded into idf BEFORE the chunk bounds, so pruning
+    stays exact for the weighted scores too.
+
+    ``allowed``: optional SORTED unique doc_id array — attribute-filtered
+    retrieval (Lucene filtered-search analog). Docs outside it are dropped
+    BEFORE the heap, so the result is the true filtered top-k (post-hoc
+    filtering of an unfiltered top-k would be wrong). Pruning stays safe:
+    a chunk's stored upper bound holds for any doc subset — the same
+    argument that keeps tombstone masking safe. ``chunk_allowed`` is the
+    distributed form: a per-row sorted array joined on chunk, so the set
+    never rides a closure.
+
+    ``require_all``: n — conjunctive (AND) ranked retrieval: only docs
+    matched by exactly ``n`` of the query's terms score (every doc appears
+    at most once per term per chunk, and a doc's whole score lives in one
+    chunk, so the per-chunk coverage count IS the global one). Chunk
+    bounds still upper-bound the conjunctive subset's scores, so pruning
+    stays safe (looser, never wrong).
+
+    ``min_match``: m — ES ``minimum_should_match``: only docs matched by
+    AT LEAST m of the query's terms score (m=1 is plain OR, m=n is the
+    conjunctive contract; the same chunk-locality argument makes the
+    per-chunk coverage count exact). Mutually exclusive with
+    ``require_all`` at the call sites.
+
+    ``boosts``: (sorted doc_id array, aligned multiplier array) — doc
+    boosting (the SOFT twin of ``allowed``; Lucene function-query /
+    recency-boost analog): final per-doc scores multiply by the doc's
+    boost (absent docs boost 1.0). Pruning stays safe by scaling each
+    chunk's upper bound by max(1, max boost). ``bids``/``bvals`` are the
+    distributed per-chunk form (None on chunks without boosted docs).
+
+    ``decoders``: {doc_base: decode hook} for FEDERATED scatter-gather
+    (query/federated.py): rows carry ``doc_base`` (the shard's global
+    docID offset, constant within a chunk), the shard's own decode hook
+    (tombstone-masked) decodes its buffers, and decoded doc_ids shift by
+    the base into the federation-global namespace BEFORE the shared heap
+    — N shards, one heap, no doc_id collisions.
+
+    ``exclude``: set of negated terms (query/negation.py ``must_not``
+    semantics). Their rows are split off before the bounds, decoded per
+    chunk, and their doc ids mask the chunk's candidates BEFORE the heap.
+    Exclusion is chunk-local (every term's postings for a doc share the
+    doc's chunk id) so this is exact, and it only lowers achievable
+    scores, so the pruning bounds stay safe unchanged.
+
+    ``search_after``: (score, doc_id) cursor — ES ``search_after`` deep
+    pagination: only docs STRICTLY AFTER the cursor in the (score desc,
+    doc_id asc) total order enter the heap, so the heap stays size k at
+    ANY depth. The cursor is the LAST hit of the previous page, in the
+    same score space the kernel ranks by (the ROUNDED score when round_dp
+    is set, so the float equality on ties is exact). Ranks of such a page
+    are PAGE-RELATIVE.
+
+    ``demote`` / ``demote_keep`` / ``demote_factor``: the ES *boosting
+    query* — docs matching any demote term keep ranking but their final
+    score multiplies by ``demote_factor`` in [0, 1) (the soft must_not:
+    exclusion removes, demotion sinks). ``demote_keep`` lists the demote
+    terms that are ALSO positive for the query (their rows score AND
+    trigger demotion, the ES semantics). Demotion is chunk-local exact
+    and only LOWERS scores, so the pruning upper bounds stay safe; it
+    applies BEFORE rounding, so the rounded-rank contract sees the
+    demoted value."""
+    kk, bb = float(params.k), float(params.b)
+    eps = (10.0 ** -round_dp) if round_dp is not None else 0.0
+    dec = decode or _decode_default
+    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+    live = None  # rows that score; None = all of them
+    sunk_rows = ban_rows = None
+    if demote:
+        is_dem = _term_mask(names, demote)[term]
+        if is_dem.any():
+            # demote rows build the demoted-doc sets; rows whose term is
+            # NOT also positive leave the scoring rows
+            sunk_rows = is_dem
+            live = ~(is_dem & ~_term_mask(names, demote_keep or ())[term])
+            if not live.any():
+                return empty
+    if exclude:
+        is_ex = _term_mask(names, exclude)[term]
+        if live is not None:
+            is_ex &= live
+        if is_ex.any():
+            # negated rows leave the scoring rows BEFORE idf/bounds: they
+            # contribute exclusion sets, never score
+            ban_rows = is_ex
+            live = ~is_ex if live is None else live & ~is_ex
+            if not live.any():
+                return empty
+    w = weights or {}
+    idf = np.array([idf_map.get(n, np.nan) * w.get(n, 1.0) for n in names],
+                   dtype=np.float64)[term]
+
+    # group the scoring rows by chunk (stable: input order kept within a
+    # chunk), then the per-chunk upper bound sum_t idf_t * max_tfsat_t
+    order = np.arange(len(chunk)) if live is None else np.flatnonzero(live)
+    order = order[np.argsort(chunk[order], kind="stable")]
+    cs = chunk[order]
+    new = np.concatenate(([True], cs[1:] != cs[:-1]))
+    starts = np.flatnonzero(new)
+    ends = np.append(starts[1:], len(cs))
+    ub = np.zeros(len(starts))
+    np.add.at(ub, np.cumsum(new) - 1, idf[order] * max_tfsat[order])
+
+    def by_chunk(mask):
+        # {chunk: row indices in input order} for exclusion/demotion rows
+        out: dict = {}
+        for r in np.flatnonzero(mask).tolist():
+            out.setdefault(int(chunk[r]), []).append(r)
+        return out
+
+    ban_by_chunk = by_chunk(ban_rows) if ban_rows is not None else None
+    sunk_by_chunk = by_chunk(sunk_rows) if sunk_rows is not None else None
+    gb_ids, gb_vals = boosts if boosts is not None else (None, None)
+    heap: list = []  # min-heap of (score, -doc_id) — worst kept on top
+    for g in np.argsort(-ub, kind="stable").tolist():
+        rows = order[starts[g]:ends[g]]
+        first = rows[0]
+        c = int(cs[starts[g]])
+        b_ids, b_vals = gb_ids, gb_vals
+        if b_ids is None and bids is not None and bids[first] is not None:
+            b_ids = np.asarray(bids[first], dtype=np.int64)
+            b_vals = np.asarray(bvals[first], dtype=np.float64)
+        scale = 1.0
+        if b_vals is not None and len(b_vals):
+            if float(np.min(b_vals)) < 0.0:
+                raise ValueError(
+                    "doc boosts must be non-negative (a negative "
+                    "multiplier would break the pruning upper bound)"
+                )
+            scale = max(1.0, float(np.max(b_vals)))
+        if len(heap) >= k_top and ub[g] * scale < heap[0][0] - eps:
+            continue  # safe skip: every doc in chunk scores <= bound*scale
+        base = int(doc_base[first]) if doc_base is not None else 0
+        d = decoders.get(base, dec) if decoders is not None else dec
+        docs_all: list = []
+        contrib_all: list = []
+        for r in rows.tolist():
+            doc_ids, tfs, dl_norm = d(postings[r])
+            contrib_all.append(idf[r] * tf_saturation(tfs, dl_norm, kk, bb))
+            docs_all.append(doc_ids)
+        docs = np.concatenate(docs_all)
+        contribs = np.concatenate(contrib_all)
+        if base:
+            # shift into the federation-global docID namespace (order-
+            # preserving, so downstream unique/tie-break logic is as-is)
+            docs = docs + base
+        if ban_by_chunk is not None and c in ban_by_chunk:
+            # same decoder as the chunk's scoring rows (tombstone-masked
+            # where applicable), same base shift — exclusion lands in the
+            # same docID namespace as the candidates
+            banned = np.concatenate([d(postings[r])[0]
+                                     for r in ban_by_chunk[c]])
+            if banned.size:
+                if base:
+                    banned = banned + base
+                m = ~_member_mask(docs, np.unique(banned))
+                docs, contribs = docs[m], contribs[m]
+                if docs.size == 0:
+                    continue
+        allow = allowed
+        if allow is None and chunk_allowed is not None:
+            # Spark's sort_array already sorted + deduped the chunk's set
+            allow = np.asarray(chunk_allowed[first], dtype=np.int64)
+        if allow is not None:
+            m = _member_mask(docs, allow)
+            docs, contribs = docs[m], contribs[m]
+            if docs.size == 0:
+                continue
+        uniq, inv, cov = np.unique(docs, return_inverse=True,
+                                   return_counts=True)
+        scores = np.zeros(len(uniq))
+        np.add.at(scores, inv, contribs)
+        if require_all is not None:
+            hit = cov == require_all
+            if not hit.any():
+                continue
+            uniq, scores = uniq[hit], scores[hit]
+        if min_match is not None and min_match > 1:
+            hit = cov >= min_match
+            if not hit.any():
+                continue
+            uniq, scores = uniq[hit], scores[hit]
+        if b_ids is not None and b_ids.size:
+            bidx = np.searchsorted(b_ids, uniq)
+            bidx[bidx == b_ids.size] = 0
+            hitb = b_ids[bidx] == uniq
+            if hitb.any():
+                mult = np.ones(len(uniq))
+                mult[hitb] = b_vals[bidx[hitb]]
+                scores = scores * mult
+        if sunk_by_chunk is not None and c in sunk_by_chunk:
+            sunk = np.concatenate([d(postings[r])[0]
+                                   for r in sunk_by_chunk[c]])
+            if sunk.size:
+                if base:
+                    sunk = sunk + base
+                hitd = _member_mask(uniq, np.unique(sunk))
+                if hitd.any():
+                    scores = scores.copy()
+                    scores[hitd] *= demote_factor
+        if round_dp is not None:
+            scores = np.round(scores, round_dp)
+        if search_after is not None:
+            # strictly after the cursor in (score desc, doc_id asc) order;
+            # a doc's whole score lives in one chunk, so the per-chunk cut
+            # is the global one
+            cs_, cd = float(search_after[0]), int(search_after[1])
+            m = (scores < cs_) | ((scores == cs_) & (uniq > cd))
+            uniq, scores = uniq[m], scores[m]
+            if uniq.size == 0:
+                continue
+        # vectorized candidate cut: only the chunk's top-k by (score desc,
+        # doc_id asc) can enter the heap — a hot chunk at chunk_docs=65536
+        # would otherwise cost ~1e5 Python heap iterations
+        n = len(uniq)
+        if n > k_top:
+            thresh = np.partition(scores, n - k_top)[n - k_top]
+            keep = scores >= thresh  # ties kept; lexsort settles them
+            uniq, scores = uniq[keep], scores[keep]
+        for i in np.lexsort((uniq, -scores))[:k_top].tolist():
+            item = (float(scores[i]), -int(uniq[i]))
+            if len(heap) < k_top:
+                heapq.heappush(heap, item)
+            elif item > heap[0]:
+                heapq.heapreplace(heap, item)
+            else:
+                break  # candidates are sorted: the rest can't enter
+    heap.sort(key=lambda x: (-x[0], -x[1]))
+    return (np.array([-x[1] for x in heap], dtype=np.int64),
+            np.array([x[0] for x in heap], dtype=np.float64))
+
+
 def _wand_scorer(
     k_top: int,
     params: Bm25Params,
     round_dp: int | None = None,
     idf_map: dict | None = None,
     decode=None,
-    allowed: np.ndarray | None = None,
     qweights: dict | None = None,
     require_all: dict | None = None,
     min_match: dict | None = None,
-    boosts: tuple | None = None,
     decoders: dict | None = None,
     exclude_terms: dict | None = None,
     search_after: dict | None = None,
@@ -80,89 +372,12 @@ def _wand_scorer(
     demote_keep: dict | None = None,
     demote_factor: float = 0.5,
 ):
-    """``round_dp``: round per-doc scores to this many decimals and rank by
-    the ROUNDED value (doc_id asc tie-break) — the cross-engine-stable
-    ordering the DuckDB oracle uses. Pruning stays safe under rounding via
-    an epsilon slack on the threshold (a chunk is skipped only when no doc
-    in it could even TIE the rounded heap minimum).
-
-    ``idf_map``: {term: stored 3dp idf} captured in the closure — the
-    join-free serving path ships idf with the task instead of broadcast-
-    joining the stats table (one Spark job per query batch instead of
-    three; the map is bounded by the query's term count).
-
-    ``allowed``: optional SORTED unique doc_id array — attribute-filtered
-    retrieval (Lucene filtered-search analog). Docs outside it are dropped
-    BEFORE the heap, so the result is the true filtered top-k (post-hoc
-    filtering of an unfiltered top-k would be wrong). Pruning stays safe:
-    a chunk's stored upper bound holds for any doc subset — the same
-    argument that keeps tombstone masking safe. The distributed path ships
-    the filter per-chunk instead (an ``allowed`` array column joined on
-    chunk, see bm25_topk_packed_batch) so the set never rides the closure;
-    the closure form serves the in-process LocalSearcher tier.
-
-    ``require_all``: {query_id: n} — conjunctive (AND) ranked retrieval:
-    only docs matched by exactly ``n`` of the query's terms score (every
-    doc appears at most once per term per chunk, and a doc's whole score
-    lives in one chunk, so the per-chunk coverage count IS the global
-    one). Chunk bounds still upper-bound the conjunctive subset's scores,
-    so pruning stays safe (looser, never wrong).
-
-    ``min_match``: {query_id: m} — ES ``minimum_should_match``: only
-    docs matched by AT LEAST m of the query's terms score (m=1 is plain
-    OR, m=n is the conjunctive contract; the same chunk-locality
-    argument makes the per-chunk coverage count exact, and filtering to
-    a subset keeps the pruning bounds safe). Mutually exclusive with
-    ``require_all`` at the call sites.
-
-    ``boosts``: (sorted doc_id array, aligned multiplier array) — doc
-    boosting (the SOFT twin of ``allowed``; Lucene function-query /
-    recency-boost analog): final per-doc scores multiply by the doc's
-    boost (absent docs boost 1.0). Pruning stays safe by scaling each
-    chunk's upper bound by max(1, max boost) — the distributed path
-    computes that per chunk from the joined arrays, the closure form
-    scales by the global max.
-
-    ``decoders``: {doc_base: decode hook} for FEDERATED scatter-gather
-    (query/federated.py): matched chunk rows carry a ``doc_base`` column
-    (the shard's global docID offset, constant within a chunk group), the
-    shard's own decode hook (tombstone-masked) decodes its buffers, and
-    decoded doc_ids shift by the base into the federation-global namespace
-    BEFORE the shared heap — N shards, one heap, no doc_id collisions.
-
-    ``exclude_terms``: {query_id: set of negated terms} (query/negation.py
-    ``must_not`` semantics). The negated terms' chunk rows ride the SAME
-    fan-out as scoring rows; here they are split off before the bounds,
-    decoded per chunk, and their doc ids mask the chunk's candidates
-    BEFORE the heap. Exclusion is chunk-local (every term's postings for
-    a doc share the doc's chunk id) so this is exact, and it only lowers
-    achievable scores, so the pruning bounds stay safe unchanged.
-
-    ``search_after``: {query_id: (score, doc_id)} cursor — ES
-    ``search_after`` deep pagination: only docs STRICTLY AFTER the cursor
-    in the (score desc, doc_id asc) total order enter the heap, so the
-    heap stays size k at ANY depth (from/size pays k+offset). The cursor
-    is the LAST hit of the previous page, in the same score space the
-    scorer ranks by (pass the ROUNDED score when round_dp is set — pages
-    produced by this scorer hand back exactly that value, so the float
-    equality on ties is exact). Dropping docs before the heap only lowers
-    achievable scores; pruning bounds stay safe unchanged. Emitted ranks
-    are PAGE-RELATIVE 1..k (ES search_after has no absolute rank — an
-    absolute rank would cost the offset count the cursor exists to
-    avoid).
-
-    ``demote_terms`` / ``demote_keep`` / ``demote_factor``: the ES
-    *boosting query* — docs matching any of a query's demote terms keep
-    ranking but their final score multiplies by ``demote_factor`` in
-    [0, 1) (the soft must_not: exclusion removes, demotion sinks).
-    Demote rows ride the same fan-out as scoring rows; ``demote_keep``
-    lists the demote terms that are ALSO positive for the query (their
-    rows must stay in the scoring frame — a term can contribute score
-    AND trigger demotion, the ES semantics). Demotion is chunk-local
-    exact (same argument as exclusion) and only LOWERS scores, so the
-    pruning upper bounds stay safe unchanged; it applies BEFORE
-    rounding, so the rounded-rank contract sees the demoted value."""
-    kk, bb = float(params.k), float(params.b)
+    """``applyInPandas`` adapter over :func:`wand_topk` for the Spark batch
+    paths: one group = one query's matched chunk rows (columns term,
+    chunk, max_tfsat, postings, plus the optional per-chunk ``allowed``,
+    ``bids``/``bvals`` and ``doc_base`` joins). The per-query options are
+    {query_id: value} maps here and plain values in the kernel; see
+    :func:`wand_topk` for every contract."""
     if qweights:
         # same safety rule as doc boosts: a negative coefficient makes
         # idf_w * max_tfsat the chunk MINIMUM, not maximum — the pruning
@@ -175,216 +390,39 @@ def _wand_scorer(
                         "weight would break the pruning upper bound); "
                         f"got {_w} for {_t!r}"
                     )
-    eps = (10.0 ** -round_dp) if round_dp is not None else 0.0
-    # ``decode``: optional (buf) -> (doc_ids, tfs, dl_norm) hook so a
-    # long-lived serving tier (LocalSearcher) can memoize decoded postings
-    # across queries; the distributed batch path keeps the default
-    dec = decode or (lambda buf: decode_postings(bytes(buf)))
+
+    def per_query(opt: dict | None, qid: int):
+        return opt.get(qid) if opt else None
 
     def score_query(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
-        dem_by_chunk = None
-        if demote_terms:
-            dem = demote_terms.get(qid)
-            if dem:
-                is_dem = pdf["term"].isin(dem)
-                if is_dem.any():
-                    # demote rows build the demoted-doc sets; rows whose
-                    # term is NOT also positive leave the scoring frame
-                    dem_by_chunk = dict(tuple(pdf[is_dem].groupby("chunk")))
-                    keep = (demote_keep or {}).get(qid) or set()
-                    drop = is_dem & ~pdf["term"].isin(keep)
-                    pdf = pdf[~drop]
-                    if not len(pdf):
-                        return pd.DataFrame(
-                            {
-                                "query_id": np.array([], dtype=np.int32),
-                                "doc_id": np.array([], dtype=np.int64),
-                                "score": np.array([], dtype=np.float64),
-                                "rank": np.array([], dtype=np.int32),
-                            }
-                        )
-        ex_by_chunk = None
-        if exclude_terms:
-            ex = exclude_terms.get(qid)
-            if ex:
-                is_ex = pdf["term"].isin(ex)
-                if is_ex.any():
-                    # negated rows leave the scoring frame BEFORE idf/
-                    # bounds: they contribute exclusion sets, never score
-                    ex_by_chunk = dict(tuple(pdf[is_ex].groupby("chunk")))
-                    pdf = pdf[~is_ex]
-                    if not len(pdf):
-                        return pd.DataFrame(
-                            {
-                                "query_id": np.array([], dtype=np.int32),
-                                "doc_id": np.array([], dtype=np.int64),
-                                "score": np.array([], dtype=np.float64),
-                                "rank": np.array([], dtype=np.int32),
-                            }
-                        )
-        if idf_map is not None:
-            pdf = pdf.assign(idf=pdf["term"].map(idf_map))
-        if qweights:
-            # per-(query, term) multiplicative weight (weighted-query /
-            # PRF-expanded retrieval) folded into idf BEFORE the chunk
-            # bounds are computed, so pruning stays exact for the
-            # weighted scores too
-            wmap = qweights.get(qid)
-            if wmap:
-                pdf = pdf.assign(
-                    idf=pdf["idf"] * pdf["term"].map(wmap).fillna(1.0)
-                )
-        # per-chunk upper bound Σ_t idf_t * max_tfsat_t(chunk)
-        ub = (
-            (pdf["idf"] * pdf["max_tfsat"])
-            .groupby(pdf["chunk"])
-            .sum()
-            .sort_values(ascending=False)
+        codes, names = pd.factorize(pdf["term"])
+
+        def col(name):
+            return pdf[name].to_numpy() if name in pdf.columns else None
+
+        docs, scores = wand_topk(
+            k_top, params, names, codes, pdf["chunk"].to_numpy(np.int64),
+            pdf["max_tfsat"].to_numpy(np.float64), pdf["postings"].to_numpy(),
+            idf_map,
+            weights=per_query(qweights, qid),
+            round_dp=round_dp, decode=decode, decoders=decoders,
+            doc_base=col("doc_base"), chunk_allowed=col("allowed"),
+            bids=col("bids"), bvals=col("bvals"),
+            require_all=per_query(require_all, qid),
+            min_match=per_query(min_match, qid),
+            exclude=per_query(exclude_terms, qid),
+            search_after=per_query(search_after, qid),
+            demote=per_query(demote_terms, qid),
+            demote_keep=per_query(demote_keep, qid),
+            demote_factor=demote_factor,
         )
-        by_chunk = dict(tuple(pdf.groupby("chunk")))
-        has_allowed_col = "allowed" in pdf.columns
-        has_boost_col = "bids" in pdf.columns
-        has_base = "doc_base" in pdf.columns
-        gb_ids, gb_vals = boosts if boosts is not None else (None, None)
-        heap: list = []  # min-heap of (score, -doc_id) — worst kept on top
-        for chunk, bound in ub.items():
-            rows = by_chunk[chunk]
-            b_ids, b_vals = gb_ids, gb_vals
-            if b_ids is None and has_boost_col:
-                first = rows["bids"].iloc[0]
-                if first is not None:
-                    b_ids = np.asarray(first, dtype=np.int64)
-                    b_vals = np.asarray(rows["bvals"].iloc[0], dtype=np.float64)
-            scale = 1.0
-            if b_vals is not None and len(b_vals):
-                if float(np.min(b_vals)) < 0.0:
-                    raise ValueError(
-                        "doc boosts must be non-negative (a negative "
-                        "multiplier would break the pruning upper bound)"
-                    )
-                scale = max(1.0, float(np.max(b_vals)))
-            if len(heap) >= k_top and bound * scale < heap[0][0] - eps:
-                continue  # safe skip: every doc in chunk scores <= bound*scale
-            base = int(rows["doc_base"].iloc[0]) if has_base else 0
-            d = decoders.get(base, dec) if decoders is not None else dec
-            docs_all: list = []
-            contrib_all: list = []
-            for idf, buf in zip(rows["idf"].to_numpy(), rows["postings"]):
-                doc_ids, tfs, dl_norm = d(buf)
-                contrib_all.append(idf * tf_saturation(tfs, dl_norm, kk, bb))
-                docs_all.append(doc_ids)
-            docs = np.concatenate(docs_all)
-            contribs = np.concatenate(contrib_all)
-            if base:
-                # shift into the federation-global docID namespace (order-
-                # preserving, so downstream unique/tie-break logic is as-is)
-                docs = docs + base
-            if ex_by_chunk is not None:
-                exrows = ex_by_chunk.get(chunk)
-                if exrows is not None:
-                    # same decoder as the chunk's scoring rows (tombstone-
-                    # masked where applicable), same base shift — exclusion
-                    # lands in the same docID namespace as the candidates
-                    banned = np.concatenate(
-                        [d(buf)[0] for buf in exrows["postings"]]
-                    )
-                    if banned.size:
-                        if base:
-                            banned = banned + base
-                        m = ~_member_mask(docs, np.unique(banned))
-                        docs, contribs = docs[m], contribs[m]
-                        if docs.size == 0:
-                            continue
-            allow = allowed
-            if allow is None and has_allowed_col:
-                # per-chunk filter column (joined on chunk): same array on
-                # every row of the chunk group — Spark's sort_array already
-                # sorted + deduped it
-                allow = np.asarray(rows["allowed"].iloc[0], dtype=np.int64)
-            if allow is not None:
-                m = _member_mask(docs, allow)
-                docs, contribs = docs[m], contribs[m]
-                if docs.size == 0:
-                    continue
-            uniq, inv, cov = np.unique(
-                docs, return_inverse=True, return_counts=True
-            )
-            scores = np.zeros(len(uniq))
-            np.add.at(scores, inv, contribs)
-            if require_all is not None:
-                need = require_all.get(qid)
-                if need is not None:
-                    hit = cov == need
-                    if not hit.any():
-                        continue
-                    uniq, scores = uniq[hit], scores[hit]
-            if min_match is not None:
-                need = min_match.get(qid)
-                if need is not None and need > 1:
-                    hit = cov >= need
-                    if not hit.any():
-                        continue
-                    uniq, scores = uniq[hit], scores[hit]
-            if b_ids is not None and b_ids.size:
-                bidx = np.searchsorted(b_ids, uniq)
-                bidx[bidx == b_ids.size] = 0
-                hitb = b_ids[bidx] == uniq
-                if hitb.any():
-                    mult = np.ones(len(uniq))
-                    mult[hitb] = b_vals[bidx[hitb]]
-                    scores = scores * mult
-            if dem_by_chunk is not None:
-                demrows = dem_by_chunk.get(chunk)
-                if demrows is not None:
-                    sunk = np.concatenate(
-                        [d(buf)[0] for buf in demrows["postings"]]
-                    )
-                    if sunk.size:
-                        if base:
-                            sunk = sunk + base
-                        hitd = _member_mask(uniq, np.unique(sunk))
-                        if hitd.any():
-                            scores = scores.copy()
-                            scores[hitd] *= demote_factor
-            if round_dp is not None:
-                scores = np.round(scores, round_dp)
-            if search_after is not None:
-                cur = search_after.get(qid)
-                if cur is not None:
-                    # strictly after the cursor in (score desc, doc_id asc)
-                    # order; a doc's whole score lives in one chunk, so the
-                    # per-chunk cut is the global one
-                    cs, cd = float(cur[0]), int(cur[1])
-                    m = (scores < cs) | ((scores == cs) & (uniq > cd))
-                    uniq, scores = uniq[m], scores[m]
-                    if uniq.size == 0:
-                        continue
-            # vectorized candidate cut: only the chunk's top-k by
-            # (score desc, doc_id asc) can enter the heap — a hot chunk at
-            # chunk_docs=65536 would otherwise cost ~1e5 Python heap
-            # iterations; now it's one partition + <=k pushes
-            n = len(uniq)
-            if n > k_top:
-                thresh = np.partition(scores, n - k_top)[n - k_top]
-                keep = scores >= thresh  # ties kept; lexsort settles them
-                uniq, scores = uniq[keep], scores[keep]
-            order = np.lexsort((uniq, -scores))[:k_top]
-            for i in order:
-                item = (float(scores[i]), -int(uniq[i]))
-                if len(heap) < k_top:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-                else:
-                    break  # candidates are sorted: the rest can't enter
-        out = sorted(heap, key=lambda x: (-x[0], -x[1]))
         return pd.DataFrame(
             {
-                "query_id": qid,
-                "doc_id": [-d for _, d in out],
-                "score": [s for s, _ in out],
-                "rank": np.arange(1, len(out) + 1, dtype=np.int32),
+                "query_id": np.full(len(docs), qid, dtype=np.int32),
+                "doc_id": docs,
+                "score": scores,
+                "rank": np.arange(1, len(docs) + 1, dtype=np.int32),
             }
         )
 
