@@ -41,14 +41,14 @@ from typing import Iterable, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import fsio
 from .build import Bm25Params
 from .codec import decode_docs, decode_positions, decode_postings
-from .deletes import load_delete_mask
-from .packed import INDEX_SCHEMA, _encode_partition
+from .deletes import TOMBSTONE_SCHEMA, load_delete_mask
+from .packed import INDEX_SCHEMA, _encode_partition, read_docs
 
 
 def _decode_to_rows(payload: str, positional: bool, mask):
@@ -119,7 +119,7 @@ def merged_index_plan(
     positional = bool(manifest.get("positional"))
     params = Bm25Params(k=manifest["k"], b=manifest["b"])
     chunk_docs = int(manifest["chunk_docs"])
-    rows = spark.read.parquet(*index_paths).mapInPandas(
+    rows = spark.read.schema(INDEX_SCHEMA).parquet(*index_paths).mapInPandas(
         _decode_to_rows(payload, positional, mask),
         schema=(
             "term string, doc_id long, dlq long, pos long"
@@ -172,12 +172,15 @@ def compact_index(
         spark, manifest, old_index, mask, n_partitions=n_partitions
     )
     new_index = fsio.join(path, f"index_v{version}")
-    merged.write.mode("overwrite").parquet(new_index)
+    written = Observation()
+    merged.observe(
+        written, F.sum(F.length("postings")).alias("postings_bytes")
+    ).write.mode("overwrite").parquet(new_index)
 
     # ---- docs + sidecar rewrite (minus tombstones) -------------------------
-    docs = spark.read.parquet(*old_docs)
+    docs = read_docs(spark, old_docs, manifest.get("docs_schema"))
     if old_tombs:
-        tombs = spark.read.parquet(*old_tombs).select("doc_id")
+        tombs = spark.read.schema(TOMBSTONE_SCHEMA).parquet(*old_tombs)
         docs = docs.join(tombs, "doc_id", "left_anti")
     new_docs = fsio.join(path, f"docs_v{version}")
     docs.write.mode("overwrite").parquet(new_docs)
@@ -186,7 +189,9 @@ def compact_index(
         norms = spark.read.parquet(*old_norms)
         if old_tombs:
             norms = norms.join(
-                spark.read.parquet(*old_tombs).select("doc_id"), "doc_id", "left_anti"
+                spark.read.schema(TOMBSTONE_SCHEMA).parquet(*old_tombs),
+                "doc_id",
+                "left_anti",
             )
         new_norms = fsio.join(path, f"doc_norms_v{version}")
         norms.write.mode("overwrite").parquet(new_norms)
@@ -201,6 +206,7 @@ def compact_index(
         if any(fsio.exists(spark, d) for d in g)
     ]
     manifest["compaction"] = version
+    manifest["postings_bytes"] = int(written.get["postings_bytes"] or 0)
     manifest["index_dir"] = f"index_v{version}"
     manifest["docs_dir"] = f"docs_v{version}"
     if new_norms is not None:

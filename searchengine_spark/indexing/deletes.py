@@ -47,7 +47,9 @@ from pyspark.sql import functions as F
 
 from . import fsio
 from .codec import decode_positions, decode_postings
+from .packed import TERM_STATS_SCHEMA, read_docs
 
+TOMBSTONE_SCHEMA = "doc_id long"  # deletes/<version>: the tombstoned ids
 _STASH_CAP = 8192  # dead-weakref purge threshold for the paired-decoder stash
 
 
@@ -174,7 +176,7 @@ def load_delete_mask(spark: SparkSession, path: str, manifest: dict) -> Optional
             "the deletes into the layout, or raise "
             "SPARK_GRAFT_MAX_TOMBSTONES for a one-off rescue.")
     ids = np.array(
-        [r["doc_id"] for r in spark.read.parquet(*dirs).select("doc_id").collect()],
+        [r["doc_id"] for r in spark.read.schema(TOMBSTONE_SCHEMA).parquet(*dirs).collect()],
         dtype=np.int64,
     )
     return DeleteMask(ids) if ids.size else None
@@ -216,7 +218,7 @@ def delete_docs(
     else:
         version = max(seq, max(committed) + 1 if committed else 0)
 
-    docs = spark.read.parquet(*_docs_paths(path, manifest))
+    docs = read_docs(spark, _docs_paths(path, manifest), manifest.get("docs_schema"))
     if where is not None:
         target = docs.filter(F.expr(where))
     else:
@@ -228,7 +230,7 @@ def delete_docs(
     prior = tombstone_dirs(path, manifest)
     if prior:
         target = target.join(
-            spark.read.parquet(*prior).select("doc_id"), "doc_id", "left_anti"
+            spark.read.schema(TOMBSTONE_SCHEMA).parquet(*prior), "doc_id", "left_anti"
         )
     target = target.select("doc_id", "tokens").persist()
     n_del = target.count()
@@ -254,7 +256,11 @@ def delete_docs(
     live = int(manifest.get("n_docs_live", manifest["n_docs"]))
     new_live = live - n_del
     old_dir = manifest.get("term_stats_dir", "term_stats")
-    old = spark.read.parquet(fsio.join(path, old_dir)).select("term", "df")
+    old = (
+        spark.read.schema(TERM_STATS_SCHEMA)
+        .parquet(fsio.join(path, old_dir))
+        .select("term", "df")
+    )
     merged = (
         old.join(deltas, "term", "left")
         .select(

@@ -13,7 +13,9 @@ shallow (metadata-only, no posting decode — seconds at any scale):
     ids exactly [0, n_docs);
   - tombstones: count == n_docs - n_docs_live, every id in [0, n_docs);
   - Σ df_chunk over index rows == n_postings + Σ tombstoned postings
-    (manifest n_postings is live-exact by the delete delta contract);
+    (manifest n_postings is live-exact by the delete delta contract), and
+    Σ stored postings bytes == the manifest's postings_bytes, where the
+    manifest records it;
   - doc_norms (sidecar builds): exactly one row per doc with dl > 0.
 
 deep (adds ONE decoding pass over the index — the cost of a full scan):
@@ -183,7 +185,8 @@ def verify_index(spark: SparkSession, path: str, deep: bool = False) -> dict:
 
     # ---- posting counts vs ledgers ---------------------------------------
     index = spark.read.parquet(*dirs["index"])
-    sum_df = int(index.agg(F.sum("df_chunk")).collect()[0][0] or 0)
+    row = index.agg(F.sum("df_chunk"), F.sum(F.length("postings"))).collect()[0]
+    sum_df, stored = int(row[0] or 0), int(row[1] or 0)
     tomb_postings = sum(int(d["n_postings"]) for d in deletes)
     checks["index_postings"] = sum_df
     if sum_df != int(manifest["n_postings"]) + tomb_postings:
@@ -191,6 +194,9 @@ def verify_index(spark: SparkSession, path: str, deep: bool = False) -> dict:
             f"sum(df_chunk)={sum_df} != n_postings {manifest['n_postings']}"
             f" + tombstoned {tomb_postings}"
         )
+    if "postings_bytes" in manifest and stored != int(manifest["postings_bytes"]):
+        fail(f"stored postings bytes {stored} != postings_bytes "
+             f"{manifest['postings_bytes']} (the preload budget)")
 
     # ---- sidecar coverage --------------------------------------------------
     if manifest.get("tfidf_sidecar"):

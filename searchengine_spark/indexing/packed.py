@@ -31,9 +31,18 @@ Each stage writes Parquet + Spark's _SUCCESS marker; ``resume=True`` skips
 completed stages (checkpoint-resumable, north_rule). ``lineage`` records
 per-file row counts and doc ranges; ``manifest.json`` (written LAST =
 commit marker) records scalars, config, per-stage wall times and
-throughput. Manifest totals (n_postings, n_chunks) are aggregated from the
-tiny lineage sidecars — the index itself is scanned exactly twice after
-being written (per-file lineage + term df), never for scalar bookkeeping.
+throughput. The build submits only jobs that move data:
+
+- manifest totals are observed on the sidecar writes themselves (dl_norm
+  bounds on ``lineage``, n_chunks/n_postings/postings_bytes on
+  ``lineage_index``, n_terms on ``term_stats``) and recorded per stage in
+  ``build_state.json`` — nothing is re-read for scalar bookkeeping;
+- every re-read pins the writer's schema (``INDEX_SCHEMA``,
+  ``TERM_STATS_SCHEMA``, and the docs frame's DDL, kept in the manifest as
+  ``docs_schema``), so no read pays a footer-inference job;
+- the independent sidecars run on a 2-thread pool beside the main stages
+  (``lineage`` beside ``index``, ``lineage_index`` beside ``term_stats``),
+  inheriting the caller's job group.
 
 All sidecar metadata IO (markers, state, manifest) goes through the JVM
 Hadoop FileSystem (fsio.py), so ``path`` may be any Hadoop-FS URI
@@ -45,10 +54,12 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from typing import Iterable, Optional
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -74,9 +85,29 @@ INDEX_SCHEMA = T.StructType(
     ]
 )
 
+#: term_stats as every writer commits it (build, append and delete merges)
+TERM_STATS_SCHEMA = "term string, df long, idf double"
+
 
 def _done(spark: SparkSession, path: str) -> bool:
     return fsio.exists(spark, fsio.join(path, "_SUCCESS"))
+
+
+def _schema_ddl(schema: T.StructType) -> str:
+    """DDL of ``schema`` without nullability: file reads make every column
+    nullable anyway, so a shard merge and a fresh build record the same
+    string for the same columns."""
+    return ", ".join(
+        "`{}` {}".format(f.name.replace("`", "``"), f.dataType.simpleString())
+        for f in schema.fields
+    )
+
+
+def read_docs(spark: SparkSession, paths, ddl: Optional[str]) -> DataFrame:
+    """Read docs-stage parquet under its recorded DDL; ``ddl=None`` (an
+    index built before ``docs_schema`` was recorded) infers it."""
+    reader = spark.read if ddl is None else spark.read.schema(ddl)
+    return reader.parquet(*paths)
 
 
 def _stage_dirs(path: str) -> dict:
@@ -289,18 +320,20 @@ def write_docs_stage(
     """Write the docs stage from an already-TOKENIZED frame
     (``*order_cols, tokens``): dense docIDs in global order_cols order,
     dl = token count, with N/avgdl observed on the write (no second pass)
-    and committed to ``build_state.json``. Shared by the fresh build
-    (which tokenizes first) and the shard merge (``merge.py``, which
-    reuses the shards' STORED token streams — a merge never re-tokenizes).
-    Returns the state dict."""
+    and committed to ``build_state.json`` together with the written
+    frame's DDL (``docs_schema``: the build's re-reads pin it). Shared by
+    the fresh build (which tokenizes first) and the shard merge
+    (``merge.py``, which reuses the shards' STORED token streams — a merge
+    never re-tokenizes). Returns the state dict."""
     spark = tokenized.sparkSession
     docs = with_doc_ids(tokenized, order_cols=order_cols, n_partitions=n_partitions)
     id_handle = docs  # untransformed return value carries the persist handle
-    docs = docs.withColumn("dl", F.size("tokens").cast("long"))
+    docs = docs.withColumn("dl", F.size("tokens").cast("long")).select(
+        DOC_ID, *order_cols, "tokens", "dl"
+    )
     obs = Observation()
     (
-        docs.select(DOC_ID, *order_cols, "tokens", "dl")
-        .observe(obs, F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
+        docs.observe(obs, F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
         .write.mode("overwrite")
         .parquet(dirs["docs"])
     )
@@ -311,10 +344,81 @@ def write_docs_stage(
             "docs stage is empty — refusing to commit an index with no "
             "documents (avgdl undefined)"
         )
-    state = {"n_docs": int(got["n"]), "avgdl": float(got["avgdl"])}
+    state = {
+        "n_docs": int(got["n"]),
+        "avgdl": float(got["avgdl"]),
+        "docs_schema": _schema_ddl(docs.schema),
+    }
     unpersist_doc_ids(id_handle)
     fsio.write_text(spark, dirs["state"], json.dumps(state))
     return state
+
+
+def _index_frame(
+    docs: DataFrame,
+    avgdl: float,
+    params: Bm25Params,
+    chunk_docs: int,
+    positional: bool,
+    payload: str,
+    tfidf_doc_schema: str,
+) -> DataFrame:
+    """The index stage's rows (``INDEX_SCHEMA``): explode the stored tokens
+    -> one range shuffle on (term, doc_id) -> chunked varbyte postings."""
+    # dlq = round(dl/avgdl, 3)*1000 — integerized EXACTLY like the stored
+    # footer value (bm25.py:76-81): round-half-even on the double, *1000
+    dlq = F.round(F.round(F.col("dl") / F.lit(avgdl), 3) * 1000.0).cast("long")
+    if payload == "tfidf":
+        # reference 'doc:freq/w' lines: pre-agg tf, attach the stored-3dp
+        # weight under tfidf_doc_schema (the SAME Spark expressions as
+        # tfidf.tfidf_weights -> bit-identical stored values), quantize
+        # losslessly into the third triple slot
+        from ..query.tfidf import _uniform_tf_col
+
+        occ = docs.select(DOC_ID, F.explode("tokens").alias("term"))
+        tfagg = occ.groupBy("term", DOC_ID).agg(F.count("*").alias("tf"))
+        wr = _uniform_tf_col(F.col("tf"), tfidf_doc_schema[0])
+        if tfidf_doc_schema[2] == "c":
+            norms = tfagg.groupBy(DOC_ID).agg(
+                F.sqrt(F.sum(wr * wr)).alias("nrm")
+            ).select(F.col(DOC_ID).alias("_nd"), "nrm")
+            tok = tfagg.join(norms, F.col(DOC_ID) == F.col("_nd"))
+            w_raw = wr / F.col("nrm")
+        else:
+            # 'n': every weight is 1 (reference uniform_weight 'n',
+            # tf_idf.py:201); 'b': identity (no reference branch)
+            tok = tfagg
+            w_raw = F.lit(1.0) if tfidf_doc_schema[2] == "n" else wr
+        tok = tok.select(
+            "term",
+            DOC_ID,
+            "tf",
+            F.round(F.bround(w_raw, 3) * 1000.0)
+            .cast("long")
+            .alias("dlq"),  # triple slot 3 = wq for this payload
+        )
+    elif positional:
+        tok = docs.select(
+            DOC_ID, dlq.alias("dlq"), F.posexplode("tokens").alias("pos", "term")
+        )
+    else:
+        tok = docs.select(DOC_ID, dlq.alias("dlq"), F.explode("tokens").alias("term"))
+    # ONE shuffle: raw token occurrences range-partitioned + sorted by
+    # (term, doc_id) — chunk is monotone in doc_id so this order equals
+    # (term, chunk, doc_id), and the encoder derives chunk itself (one
+    # fewer shuffled column). tf comes out as run lengths, so no
+    # (term, doc) pre-agg exchange is needed. The range layout doubles
+    # as the merged, sorted on-disk index (spimi.py:211-236 analog);
+    # min/max parquet stats on `term` then give point-lookup pruning
+    # like the reference's binary search (index.py:93-131).
+    sort_cols = ["term", DOC_ID] + (["pos"] if positional else [])
+    sorted_tok = tok.repartitionByRange("term", DOC_ID).sortWithinPartitions(
+        *sort_cols
+    )
+    return sorted_tok.mapInPandas(
+        _encode_partition(params, chunk_docs, positional, payload),
+        schema=INDEX_SCHEMA,
+    )
 
 
 def build_packed_index(
@@ -382,7 +486,8 @@ def build_packed_index(
                          "positional=True with tfidf_sidecar instead")
     spark = transcripts.sparkSession
     dirs = _stage_dirs(path)
-    metrics: dict = {"stages": {}}
+    stages: dict = {}  # stage -> wall seconds (a sidecar's on its own thread)
+    t_build = time.perf_counter()
 
     # ---- stage docs: dense docIDs + tokens + lengths, ONE write job -------
     # N and avgdl ride the write as observed metrics instead of a separate
@@ -396,14 +501,46 @@ def build_packed_index(
         write_docs_stage(base, order_cols, dirs, n_partitions=n_partitions)
     state = json.loads(fsio.read_text(spark, dirs["state"]))
     n_docs, avgdl = state["n_docs"], state["avgdl"]
-    metrics["stages"]["docs"] = time.perf_counter() - t0
+    stages["docs"] = time.perf_counter() - t0
 
-    docs = spark.read.parquet(dirs["docs"])
+    docs = read_docs(spark, [dirs["docs"]], state.get("docs_schema"))
 
-    # ---- stage lineage: per-file counts + doc ranges (pruned 2-col scan) --
-    t0 = time.perf_counter()
-    if not (resume and _done(spark, dirs["lineage"])):
-        lineage = (
+    pool = ThreadPoolExecutor(max_workers=2)
+
+    def launch(stage: str, frame: DataFrame, *totals, parts: int = 0) -> Future:
+        """Write sidecar ``stage`` from ``frame`` on the pool, observing
+        ``totals`` on the write; returns a future of (seconds, totals). A
+        resumed build reuses a stage that has both its _SUCCESS marker and
+        its recorded totals."""
+        if resume and _done(spark, dirs[stage]) and stage in state:
+            skipped: Future = Future()
+            skipped.set_result((0.0, state[stage]))
+            return skipped
+
+        def run():
+            t0 = time.perf_counter()
+            obs = Observation()
+            out = frame.observe(obs, *totals)
+            (out.coalesce(parts) if parts else out).write.mode("overwrite").parquet(
+                dirs[stage]
+            )
+            return time.perf_counter() - t0, obs.get
+
+        # the wrapper carries the caller's job group (and session tags)
+        # into the pool thread, so every sidecar job stays attributed
+        return pool.submit(inheritable_thread_target(spark)(run))
+
+    def settle(stage: str, future: Future) -> None:
+        """Wait for a sidecar (re-raising its failure) and commit its
+        totals to build_state.json — only this, the main thread, writes."""
+        stages[stage], state[stage] = future.result()
+        fsio.write_text(spark, dirs["state"], json.dumps(state))
+
+    with pool:
+        # ---- stage lineage: per-file counts + doc ranges (pruned 2-col
+        # scan); needs only the docs stage, so it runs beside the index
+        lineage = launch(
+            "lineage",
             docs.select(DOC_ID, "dl", F.input_file_name().alias("file"))
             .groupBy("file")
             .agg(
@@ -414,79 +551,31 @@ def build_packed_index(
                 F.min("dl").alias("min_dl"),
                 F.max("dl").alias("max_dl"),
             )
-            .withColumn("stage", F.lit("docs"))
+            .withColumn("stage", F.lit("docs")),
+            F.min(F.round(F.col("min_dl") / F.lit(avgdl), 3)).alias("dl_norm_min"),
+            F.max(F.round(F.col("max_dl") / F.lit(avgdl), 3)).alias("dl_norm_max"),
         )
-        lineage.write.mode("overwrite").parquet(dirs["lineage"])
-    metrics["stages"]["lineage"] = time.perf_counter() - t0
 
-    # ---- stage index: explode -> tf -> chunked varbyte postings -----------
-    t0 = time.perf_counter()
-    if not (resume and _done(spark, dirs["index"])):
-        # dlq = round(dl/avgdl, 3)*1000 — integerized EXACTLY like the stored
-        # footer value (bm25.py:76-81): round-half-even on the double, *1000
-        dlq = F.round(F.round(F.col("dl") / F.lit(avgdl), 3) * 1000.0).cast("long")
-        if payload == "tfidf":
-            # reference 'doc:freq/w' lines: pre-agg tf, attach the stored-3dp
-            # weight under tfidf_doc_schema (the SAME Spark expressions as
-            # tfidf.tfidf_weights -> bit-identical stored values), quantize
-            # losslessly into the third triple slot
-            from ..query.tfidf import _uniform_tf_col
+        # ---- stage index: explode -> tf -> chunked varbyte postings -------
+        t0 = time.perf_counter()
+        if not (resume and _done(spark, dirs["index"])):
+            # totals recorded against an earlier index are stale now
+            stale = [state.pop(s) for s in ("lineage_index", "term_stats") if s in state]
+            if stale:
+                fsio.write_text(spark, dirs["state"], json.dumps(state))
+            _index_frame(
+                docs, avgdl, params, chunk_docs, positional, payload,
+                tfidf_doc_schema,
+            ).write.mode("overwrite").parquet(dirs["index"])
+        stages["index"] = time.perf_counter() - t0
 
-            occ = docs.select(DOC_ID, F.explode("tokens").alias("term"))
-            tfagg = occ.groupBy("term", DOC_ID).agg(F.count("*").alias("tf"))
-            wr = _uniform_tf_col(F.col("tf"), tfidf_doc_schema[0])
-            if tfidf_doc_schema[2] == "c":
-                norms = tfagg.groupBy(DOC_ID).agg(
-                    F.sqrt(F.sum(wr * wr)).alias("nrm")
-                ).select(F.col(DOC_ID).alias("_nd"), "nrm")
-                tok = tfagg.join(norms, F.col(DOC_ID) == F.col("_nd"))
-                w_raw = wr / F.col("nrm")
-            else:
-                # 'n': every weight is 1 (reference uniform_weight 'n',
-                # tf_idf.py:201); 'b': identity (no reference branch)
-                tok = tfagg
-                w_raw = F.lit(1.0) if tfidf_doc_schema[2] == "n" else wr
-            tok = tok.select(
-                "term",
-                DOC_ID,
-                "tf",
-                F.round(F.bround(w_raw, 3) * 1000.0)
-                .cast("long")
-                .alias("dlq"),  # triple slot 3 = wq for this payload
-            )
-        elif positional:
-            tok = docs.select(
-                DOC_ID, dlq.alias("dlq"), F.posexplode("tokens").alias("pos", "term")
-            )
-        else:
-            tok = docs.select(DOC_ID, dlq.alias("dlq"), F.explode("tokens").alias("term"))
-        # ONE shuffle: raw token occurrences range-partitioned + sorted by
-        # (term, doc_id) — chunk is monotone in doc_id so this order equals
-        # (term, chunk, doc_id), and the encoder derives chunk itself (one
-        # fewer shuffled column). tf comes out as run lengths, so no
-        # (term, doc) pre-agg exchange is needed. The range layout doubles
-        # as the merged, sorted on-disk index (spimi.py:211-236 analog);
-        # min/max parquet stats on `term` then give point-lookup pruning
-        # like the reference's binary search (index.py:93-131).
-        sort_cols = ["term", DOC_ID] + (["pos"] if positional else [])
-        sorted_tok = tok.repartitionByRange("term", DOC_ID).sortWithinPartitions(
-            *sort_cols
-        )
-        chunks = sorted_tok.mapInPandas(
-            _encode_partition(params, chunk_docs, positional, payload),
-            schema=INDEX_SCHEMA,
-        )
-        chunks.write.mode("overwrite").parquet(dirs["index"])
-    metrics["stages"]["index"] = time.perf_counter() - t0
+        index = spark.read.schema(INDEX_SCHEMA).parquet(dirs["index"])
 
-    index = spark.read.parquet(dirs["index"])
-
-    # ---- index-stage segment lineage: per-output-file (== per encode
-    # partition) metrics — postings written, segment sizes, term ranges
-    # (north_rule: per-partition lineage and metrics) --------------------
-    t0 = time.perf_counter()
-    if not (resume and _done(spark, dirs["lineage_index"])):
-        (
+        # ---- index-stage segment lineage: per-output-file (== per encode
+        # partition) metrics — postings written, segment sizes, term ranges
+        # (north_rule: per-partition lineage and metrics) ----------------
+        lineage_index = launch(
+            "lineage_index",
             index.withColumn("file", F.input_file_name())
             .groupBy("file")
             .agg(
@@ -497,66 +586,60 @@ def build_packed_index(
                 F.min("term").alias("term_lo"),
                 F.max("term").alias("term_hi"),
             )
-            .withColumn("stage", F.lit("index"))
-            .write.mode("overwrite")
-            .parquet(dirs["lineage_index"])
+            .withColumn("stage", F.lit("index")),
+            F.sum("n_chunks").alias("n_chunks"),
+            F.sum("n_postings").alias("n_postings"),
+            F.sum("postings_bytes").alias("postings_bytes"),
         )
-    metrics["stages"]["lineage_index"] = time.perf_counter() - t0
 
-    # ---- stage stats: df/idf sidecar (the '.tiny', spimi.py:233-242) ------
-    t0 = time.perf_counter()
-    if not (resume and _done(spark, dirs["term_stats"])):
-        ts = index.groupBy("term").agg(F.sum("df_chunk").alias("df"))
-        ts = ts.withColumn(
-            "idf", F.round(F.log(F.lit(float(n_docs)) / F.col("df")), 3)
+        # ---- stage stats: df/idf sidecar (the '.tiny', spimi.py:233-242) --
+        term_stats = launch(
+            "term_stats",
+            index.groupBy("term")
+            .agg(F.sum("df_chunk").alias("df"))
+            .withColumn(
+                "idf", F.round(F.log(F.lit(float(n_docs)) / F.col("df")), 3)
+            ),
+            F.count(F.lit(1)).alias("n_terms"),
+            parts=8,
         )
-        ts.coalesce(8).write.mode("overwrite").parquet(dirs["term_stats"])
-    metrics["stages"]["term_stats"] = time.perf_counter() - t0
 
-    # ---- optional stage doc_norms: cosine norms per doc (TF-IDF sidecar) --
-    # one shuffle, three aggregates: the cosine denominator for each
-    # doc-side tf letter (l: 1+ln tf, b: 0/1, n: raw tf) so packed serving
-    # accepts any SMART doc-side schema; `nrm` keeps its pre-generalization
-    # name (the lnc norm) for old-index compatibility
-    if tfidf_sidecar:
-        t0 = time.perf_counter()
-        if not (resume and _done(spark, dirs["doc_norms"])):
-            tfagg = (
-                docs.select(DOC_ID, F.explode("tokens").alias("term"))
-                .groupBy(DOC_ID, "term")
-                .agg(F.count("*").alias("tf"))
-            )
-            wr = F.lit(1.0) + F.log(F.col("tf").cast("double"))
-            tfd = F.col("tf").cast("double")
-            (
-                tfagg.groupBy(DOC_ID)
-                .agg(
-                    F.sqrt(F.sum(wr * wr)).alias("nrm"),
-                    F.sqrt(F.count("*").cast("double")).alias("nrm_b"),
-                    F.sqrt(F.sum(tfd * tfd)).alias("nrm_n"),
+        # ---- optional stage doc_norms: cosine norms per doc (TF-IDF
+        # sidecar) — one shuffle, three aggregates: the cosine denominator
+        # for each doc-side tf letter (l: 1+ln tf, b: 0/1, n: raw tf) so
+        # packed serving accepts any SMART doc-side schema; `nrm` keeps its
+        # pre-generalization name (the lnc norm) for old-index compatibility
+        if tfidf_sidecar:
+            t0 = time.perf_counter()
+            if not (resume and _done(spark, dirs["doc_norms"])):
+                tfagg = (
+                    docs.select(DOC_ID, F.explode("tokens").alias("term"))
+                    .groupBy(DOC_ID, "term")
+                    .agg(F.count("*").alias("tf"))
                 )
-                .write.mode("overwrite")
-                .parquet(dirs["doc_norms"])
-            )
-        metrics["stages"]["doc_norms"] = time.perf_counter() - t0
+                wr = F.lit(1.0) + F.log(F.col("tf").cast("double"))
+                tfd = F.col("tf").cast("double")
+                (
+                    tfagg.groupBy(DOC_ID)
+                    .agg(
+                        F.sqrt(F.sum(wr * wr)).alias("nrm"),
+                        F.sqrt(F.count("*").cast("double")).alias("nrm_b"),
+                        F.sqrt(F.sum(tfd * tfd)).alias("nrm_n"),
+                    )
+                    .write.mode("overwrite")
+                    .parquet(dirs["doc_norms"])
+                )
+            stages["doc_norms"] = time.perf_counter() - t0
+
+        settle("lineage", lineage)
+        settle("lineage_index", lineage_index)
+        settle("term_stats", term_stats)
 
     # ---- manifest = commit marker (written last) ---------------------------
-    # totals come from the TINY lineage/stats sidecars — no rescan of the
-    # index for scalar bookkeeping (three O(#files)/O(#terms) micro-jobs)
-    li_row = spark.read.parquet(dirs["lineage_index"]).agg(
-        F.sum("n_chunks"), F.sum("n_postings")
-    ).collect()[0]
-    n_chunks, n_postings = int(li_row[0] or 0), int(li_row[1] or 0)
-    n_terms = spark.read.parquet(dirs["term_stats"]).count()
-    dl_row = (
-        spark.read.parquet(dirs["lineage"])
-        .agg(
-            F.min(F.round(F.col("min_dl") / F.lit(avgdl), 3)),
-            F.max(F.round(F.col("max_dl") / F.lit(avgdl), 3)),
-        )
-        .collect()[0]
-    )
-    build_s = sum(metrics["stages"].values())
+    # totals were observed on the sidecar writes above: no re-read here
+    lin, li = state["lineage"], state["lineage_index"]
+    n_postings = int(li["n_postings"] or 0)
+    build_s = time.perf_counter() - t_build  # wall time: sidecars overlap
     conf = spark.conf
     manifest = {
         "format": "searchengine_spark.packed/1",
@@ -564,8 +647,8 @@ def build_packed_index(
         "tfidf_sidecar": tfidf_sidecar,
         "payload": payload,
         **({"tfidf_doc_schema": tfidf_doc_schema} if payload == "tfidf" else {}),
-        "dl_norm_min": float(dl_row[0] or 0.0),
-        "dl_norm_max": float(dl_row[1] or 0.0),
+        "dl_norm_min": float(lin["dl_norm_min"] or 0.0),
+        "dl_norm_max": float(lin["dl_norm_max"] or 0.0),
         "spark_conf": {
             "shuffle_partitions": conf.get("spark.sql.shuffle.partitions", None),
             "adaptive_enabled": conf.get("spark.sql.adaptive.enabled", None),
@@ -581,14 +664,16 @@ def build_packed_index(
         "chunk_docs": chunk_docs,
         "tokenizer": cfg.to_manifest(),
         "order_cols": list(order_cols),
-        "n_terms": int(n_terms),
-        "n_chunks": int(n_chunks),
-        "n_postings": int(n_postings),
+        **({"docs_schema": state["docs_schema"]} if "docs_schema" in state else {}),
+        "n_terms": int(state["term_stats"]["n_terms"]),
+        "n_chunks": int(li["n_chunks"] or 0),
+        "n_postings": n_postings,
+        "postings_bytes": int(li["postings_bytes"] or 0),
         "metrics": {
-            "stage_seconds": {s: round(v, 3) for s, v in metrics["stages"].items()},
+            "stage_seconds": {s: round(v, 3) for s, v in stages.items()},
             "build_seconds": round(build_s, 3),
             "docs_per_sec": round(n_docs / max(build_s, 1e-9), 1),
-            "postings_per_sec": round(int(n_postings) / max(build_s, 1e-9), 1),
+            "postings_per_sec": round(n_postings / max(build_s, 1e-9), 1),
         },
     }
     if manifest_extra:
@@ -634,15 +719,17 @@ class PackedIndex:
         docs_paths = [
             fsio.join(path, self.manifest.get("docs_dir", "docs"))
         ] + [fsio.join(path, "docs_appends", str(b)) for b in epochs]
-        self.index = spark.read.parquet(*index_paths)
-        self.term_stats = spark.read.parquet(
+        # every read pins its writer's schema (no footer-inference job);
+        # docs fall back to inference on manifests without docs_schema
+        self.index = spark.read.schema(INDEX_SCHEMA).parquet(*index_paths)
+        self.term_stats = spark.read.schema(TERM_STATS_SCHEMA).parquet(
             fsio.join(path, self.manifest.get("term_stats_dir", "term_stats"))
         )
+        self.spark = spark
+        self._docs_paths = docs_paths
         # docmap is a column-pruned view over the docs stage (no separate
         # sink): parquet reads just (doc_id, *order_cols) column chunks
-        self.docmap = spark.read.parquet(*docs_paths).select(
-            DOC_ID, *self.manifest["order_cols"]
-        )
+        self.docmap = self.docs_stage().select(DOC_ID, *self.manifest["order_cols"])
         self.doc_norms = (
             spark.read.parquet(
                 fsio.join(path, self.manifest.get("doc_norms_dir", "doc_norms")),
@@ -651,8 +738,6 @@ class PackedIndex:
             if self.manifest.get("tfidf_sidecar")
             else None
         )
-        self.spark = spark
-        self._docs_paths = docs_paths
         self._delete_mask_loaded = False
         self._delete_mask = None
 
@@ -661,7 +746,7 @@ class PackedIndex:
         base layout and every committed epoch — the stored token streams
         with their external keys. Feeds the shard merge (indexing/merge.py),
         which re-sorts these rows globally instead of re-tokenizing."""
-        return self.spark.read.parquet(*self._docs_paths)
+        return read_docs(self.spark, self._docs_paths, self.manifest.get("docs_schema"))
 
     def doc_tokens(self) -> DataFrame:
         """(doc_id, tokens) pruned view over the docs stage — the stored
@@ -670,9 +755,7 @@ class PackedIndex:
         Feeds PRF expansion / more-like-this (query/feedback.py), which
         need document term vectors for a BOUNDED doc set — callers
         semi-join it with their doc ids so the scan stays pruned."""
-        return self.spark.read.parquet(*self._docs_paths).select(
-            DOC_ID, "tokens"
-        )
+        return self.docs_stage().select(DOC_ID, "tokens")
 
     def delete_mask(self):
         """Committed tombstone set as a :class:`~.deletes.DeleteMask`

@@ -21,8 +21,11 @@ Two modes:
   (one Spark job each). Right for indexes that fit driver memory — the
   interactive/edge serving replica. ``preload="auto"`` preloads when the
   index's stored postings stay under ``AUTO_PRELOAD_BYTES`` — a BYTE
-  budget (exact from the lineage_index sidecar), so a wide positional
-  payload can't sneak past a postings-count gate.
+  budget (exact from the manifest's ``postings_bytes``, observed on the
+  index writes), so a wide positional payload can't sneak past a
+  postings-count gate. A preloaded open of a plain index runs three
+  Spark jobs, the index, term_stats and docmap snapshots: every read
+  pins its schema and the budget needs no job.
 - ``preload=False`` (lazy): nothing is snapshotted; a query's UNSEEN terms
   cost one pruned-scan collect (pushed ``In(term, …)`` row-group pruning,
   same as the distributed path), then stay cached — cold ~a Spark job,
@@ -62,11 +65,13 @@ DECODED_CACHE_POSTINGS = 100_000_000  # decoded-postings LRU cap (~2.4 GB)
 
 def estimate_postings_bytes(pidx: PackedIndex) -> int:
     """Stored postings bytes for the preload budget: EXACT from the
-    lineage_index sidecar (Σ postings_bytes — a tiny per-file metrics
-    read, never a postings scan); manifest-width heuristic only for
-    layouts predating the sidecar."""
-    from pyspark.sql import functions as F
-
+    manifest's ``postings_bytes``, which the build, every append and every
+    compaction observe on their own index writes (no Spark job at open).
+    Manifests that predate the key fall back to the base build's
+    lineage_index sidecar (Σ postings_bytes), and layouts predating that
+    sidecar to a manifest-width heuristic."""
+    if "postings_bytes" in pidx.manifest:
+        return int(pidx.manifest["postings_bytes"])
     from ..indexing import fsio
 
     p = fsio.join(pidx.path, "lineage_index")

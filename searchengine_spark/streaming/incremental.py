@@ -50,12 +50,17 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..indexing import fsio
 from ..indexing.build import Bm25Params
-from ..indexing.packed import _encode_group, _stage_dirs, INDEX_SCHEMA
+from ..indexing.packed import (
+    INDEX_SCHEMA,
+    TERM_STATS_SCHEMA,
+    _encode_group,
+    _stage_dirs,
+)
 from ..tokenizer import TokenizerConfig, tokens_column
 from ..indexing.docids import DOC_ID, unpersist_doc_ids, with_doc_ids
 
@@ -182,8 +187,14 @@ def append_batch(
     chunks = tf.groupBy("term", "chunk").applyInPandas(
         _encode_group(params, payload, positional), schema=INDEX_SCHEMA
     )
-    # staging writes: overwrite (a retried half-written epoch is replaced)
-    chunks.write.mode("overwrite").parquet(adirs["index"])
+    # staging writes: overwrite (a retried half-written epoch is replaced);
+    # the epoch's posting count and bytes ride the write as observed metrics
+    written = Observation()
+    chunks.observe(
+        written,
+        F.sum("df_chunk").alias("n_postings"),
+        F.sum(F.length("postings")).alias("postings_bytes"),
+    ).write.mode("overwrite").parquet(adirs["index"])
     docs.write.mode("overwrite").parquet(adirs["docs"])
 
     # tfidf sidecar: per-doc cosine norms for the BATCH's docs (a pure
@@ -245,11 +256,15 @@ def append_batch(
     # differs only when tombstones exist (indexing/deletes.py).
     n_docs = offset + n_new
     n_live = int(manifest.get("n_docs_live", offset)) + n_new
-    epoch = spark.read.parquet(adirs["index"])
+    epoch = spark.read.schema(INDEX_SCHEMA).parquet(adirs["index"])
     deltas = epoch.groupBy("term").agg(F.sum("df_chunk").alias("df_delta"))
-    n_post_delta = int(epoch.agg(F.sum("df_chunk")).collect()[0][0] or 0)
+    n_post_delta = int(written.get["n_postings"] or 0)
     old_dir = manifest.get("term_stats_dir", "term_stats")
-    old = spark.read.parquet(fsio.join(path, old_dir)).select("term", "df")
+    old = (
+        spark.read.schema(TERM_STATS_SCHEMA)
+        .parquet(fsio.join(path, old_dir))
+        .select("term", "df")
+    )
     merged = old.join(deltas, "term", "full_outer").select(
         "term",
         (F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("df_delta"), F.lit(0))).alias("df"),
@@ -269,6 +284,10 @@ def append_batch(
         manifest["n_docs_live"] = n_live
     manifest["append_seq"] = max(append_seq, batch_id + 1)
     manifest["n_postings"] = int(manifest["n_postings"]) + n_post_delta
+    if "postings_bytes" in manifest:  # absent: the index predates the key
+        manifest["postings_bytes"] = int(manifest["postings_bytes"]) + int(
+            written.get["postings_bytes"] or 0
+        )
     manifest["term_stats_dir"] = f"term_stats_v{batch_id}"
     manifest.setdefault("appends", []).append(
         {"batch_id": batch_id, "n_new": n_new, "n_postings": n_post_delta}
